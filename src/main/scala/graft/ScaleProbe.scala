@@ -1123,7 +1123,7 @@ object ScaleProbe {
             (0 until perBucket).map(i =>
               s"$b\tfile:$root/__bucket=$b/v0-$i.parquet"))
           t("manifest_checkpoint_100k") {
-            IndexProtocol.writeLinesAtomic(fs,
+            graft.sources.Publish.writeLinesAtomic(fs,
               new org.apache.hadoop.fs.Path(s"$root/_commits/v_0"), full)
             full.size.toLong
           }
@@ -1132,7 +1132,7 @@ object ScaleProbe {
             (1 to 8).foreach { v =>
               val lines = dHeader +: ("!3" +: (0 until perBucket).map(i =>
                 s"3\tfile:$root/__bucket=3/v$v-$i.parquet").toSeq)
-              IndexProtocol.writeLinesAtomic(fs,
+              graft.sources.Publish.writeLinesAtomic(fs,
                 new org.apache.hadoop.fs.Path(s"$root/_commits/v_$v"), lines)
             }
             8L * (perBucket + 2)
@@ -1655,9 +1655,9 @@ object ScaleProbe {
         val o = fs.create(p, true); o.write(1); o.close(); p.toString
       }
       val mf = new org.apache.hadoop.fs.Path(s"$whDir/docs_commits/staged_9")
-      graft.operators.IndexProtocol.writeLinesAtomic(fs, mf, strays)
+      graft.sources.Publish.writeLinesAtomic(fs, mf, strays)
       t("redo_manifest") {
-        graft.operators.IndexProtocol.redoFromManifest(fs, mf)
+        graft.sources.Publish.redoFromManifest(fs, mf)
         strays.size.toLong
       }
       var dirsListed = 0L

@@ -1838,6 +1838,12 @@ object SparkEntry {
     snapIvfCache.clear()
     feedRetCache.clear()
     commitCompactCache.clear()
+    incClassifiedCache.clear()
+    mvCatCache.clear()
+    mvExtCache.clear()
+    vtIdxCache.clear()
+    vtCdfCache.clear()
+    vtStreamIdxCache.clear()
     graft.sources.VersionedTable.clearManifestCache()
     deleteTree(java.nio.file.Paths.get(q40Scratch))
   }

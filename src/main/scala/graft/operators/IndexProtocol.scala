@@ -1,23 +1,20 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import graft.sources.Publish
 
 /** Shared pieces of the three index families' exactly-once batch-commit
   * protocols (BM25 [[Retrieval.appendBm25IndexBatch]], positional
   * [[Retrieval.appendPositionalIndexBatch]], IVF
   * [[Similarity.appendIvfIndexBatch]]):
   *
-  *   - atomic small-file writes (stage to a dot-tmp name, rename in) for
-  *     protocol state the recovery path must never observe half-written:
-  *     the dirty flag's stats snapshot, the per-batch staged-file
-  *     manifest;
-  *   - the per-batch STAGED-FILE MANIFEST: written BEFORE any staged
-  *     postings/list file is renamed into the live layout, listing every
-  *     destination path the attempt will create. Redo after a crash
-  *     deletes exactly the manifest's paths — O(batch's files) — instead
-  *     of listing every bucket directory (buckets × batches namenode
-  *     calls on the hot streaming path: invisible at 64 buckets, a
-  *     metadata hot loop at 4096);
+  *   - commit markers, frontiers and snapshot readers' view of them;
+  *     the file moves and small-file writes themselves go through
+  *     [[graft.sources.Publish]] (its staged-file manifest makes redo
+  *     after a crash O(batch's files) instead of a listing of every
+  *     bucket directory — buckets × batches namenode calls on the hot
+  *     streaming path: invisible at 64 buckets, a metadata hot loop at
+  *     4096);
   *   - the WRITER LEASE: the batch protocols assume ONE writer —
   *     interleaved marker/dirty-flag writes from a second concurrent
   *     stream would corrupt derived state silently. The lease file pins
@@ -157,10 +154,10 @@ private[graft] object IndexProtocol {
     val fb = (st.committedAppends + st.frontierBatch).max
     val fd = (st.delMarkers + st.frontierDel).max
     if (fb > Long.MinValue)
-      writeLinesAtomic(fs, new Path(commitsDir, "frontier_batch"),
+      Publish.writeLinesAtomic(fs, new Path(commitsDir, "frontier_batch"),
         Seq(fb.toString))
     if (fd > Long.MinValue)
-      writeLinesAtomic(fs, new Path(commitsDir, "frontier_del"),
+      Publish.writeLinesAtomic(fs, new Path(commitsDir, "frontier_del"),
         Seq(fd.toString))
     st.committedAppends.foreach(id =>
       fs.delete(new Path(commitsDir, s"batch_$id"), false))
@@ -224,7 +221,7 @@ private[graft] object IndexProtocol {
   }
 
   /** Exclude an uncommitted batch's data files from a pinned scan by
-    * their deterministic `b<id>-<i>.parquet` names ([[moveStagedIn]]'s
+    * their deterministic `b<id>-<i>.parquet` names ([[Publish.moveStagedIn]]'s
     * naming). Files from completed builds/compactions (`part-*`,
     * `compact-*`) don't match the pattern and always serve. Apply AFTER
     * the deterministic partition-pruning filters: `input_file_name` is
@@ -254,26 +251,6 @@ private[graft] object IndexProtocol {
   def readLinesIfExists(fs: FileSystem, p: Path): Option[Seq[String]] =
     try Some(readLines(fs, p))
     catch { case _: java.io.FileNotFoundException => None }
-
-  /** Write `lines` to `p` atomically: dot-tmp in the same directory,
-    * then rename over. Readers see the old content or the new, never a
-    * prefix. (Local/HDFS rename does not replace an existing target, so
-    * the old file is removed first — the callers' recovery paths treat
-    * ABSENCE of each protocol file conservatively: a missing dirty flag
-    * at this point is unreachable because the flag is only rewritten
-    * while it does not yet exist, and a missing staged manifest means
-    * no renames have happened.)
-    */
-  def writeLinesAtomic(fs: FileSystem, p: Path, lines: Seq[String]): Unit = {
-    fs.mkdirs(p.getParent)
-    val tmp = new Path(p.getParent, s".${p.getName}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    if (fs.exists(p)) fs.delete(p, false)
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"writeLinesAtomic: rename $tmp -> $p failed")
-  }
 
   /** Parsed lease state: legacy single-line leases (writerId only,
     * pre-liveness) read as epoch 0.
@@ -360,11 +337,10 @@ private[graft] object IndexProtocol {
   private def writeLease(fs: FileSystem, commitsDir: Path, lease: Path,
       writerId: String, epoch: Long, replace: Boolean = true): Unit = {
     fs.mkdirs(commitsDir)
-    val tmp = new Path(commitsDir, s".writer.${java.util.UUID.randomUUID()}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"$writerId\n$epoch\n".getBytes("UTF-8")) finally out.close()
-    if (replace) fs.delete(lease, false)
-    if (!fs.rename(tmp, lease)) fs.delete(tmp, false) // lost: caller re-reads
+    // a lost race leaves the winner's lease: the caller re-reads it
+    Publish.writeFile(fs,
+      new Path(commitsDir, s".writer.${java.util.UUID.randomUUID()}.tmp"),
+      lease, s"$writerId\n$epoch\n".getBytes("UTF-8"), replace)
   }
 
   /** Commit-point fence check: the caller (holding `epoch` from its
@@ -393,53 +369,4 @@ private[graft] object IndexProtocol {
     */
   def releaseLease(fs: FileSystem, commitsDir: Path): Unit =
     fs.delete(new Path(commitsDir, "writer"), false)
-
-  /** Redo a crashed attempt's file moves: delete exactly the destination
-    * paths the attempt's staged-file manifest planned (renames only ever
-    * happen after the manifest is written, so the manifest covers every
-    * file a crashed attempt can have moved in). O(batch), not
-    * O(buckets): no bucket directory is listed.
-    */
-  def redoFromManifest(fs: FileSystem, manifest: Path): Unit =
-    if (fs.exists(manifest))
-      readLines(fs, manifest).filter(_.nonEmpty)
-        .foreach(f => fs.delete(new Path(f), false))
-
-  /** Move a staged partitioned write into the live layout under
-    * deterministic `b<batchId>-<i>` names, guarded by the staged-file
-    * manifest: plan the (src, dst) moves, write the manifest atomically,
-    * then rename. A crash at any point replays convergently — before
-    * the manifest nothing has moved; after it, [[redoFromManifest]]
-    * removes whatever subset landed. Returns the destination paths.
-    */
-  def moveStagedIn(fs: FileSystem, stage: Path, liveRoot: Path,
-      partitionPrefix: String, batchPrefix: String,
-      manifest: Path): Seq[Path] = {
-    // name-sorted listings: listStatus order is filesystem-dependent,
-    // and the b<id>-<i> names should not permute across replay attempts
-    val moves: Seq[(Path, Path)] =
-      fs.listStatus(stage).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith(partitionPrefix))
-        .sortBy(_.getPath.getName)
-        .flatMap { d =>
-          val dst = new Path(liveRoot, d.getPath.getName)
-          fs.listStatus(d.getPath).toSeq.filter(_.isFile)
-            .filter(_.getPath.getName.endsWith(".parquet"))
-            .sortBy(_.getPath.getName)
-            .zipWithIndex.map { case (f, i) =>
-              (f.getPath, new Path(dst, s"$batchPrefix$i.parquet"))
-            }
-        }
-    writeLinesAtomic(fs, manifest, moves.map(_._2.toString))
-    moves.foreach { case (src, dst) =>
-      fs.mkdirs(dst.getParent)
-      if (!fs.rename(src, dst))
-        throw new java.io.IOException(
-          s"moveStagedIn: rename $src -> $dst failed (a file at the " +
-            "destination can only be a crashed attempt's — the manifest " +
-            "redo should have removed it)")
-    }
-    fs.delete(stage, true)
-    moves.map(_._2)
-  }
 }

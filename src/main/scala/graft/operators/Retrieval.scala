@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.Publish
 
 /** Lexical retrieval and rank fusion over the documents corpus — the
   * text half of a retrieval stack next to [[Similarity]]'s vector half.
@@ -305,6 +306,26 @@ object Retrieval {
     }
   }
 
+  /** Exact vocab rebuild from `postings`: written to `{name}_vocab_next`,
+    * then swapped in over `{name}_vocab` with [[Publish.swapIn]]
+    * (after recovering a swap a crashed rebuild left torn).
+    */
+  private def rebuildVocab(writer: graft.sources.TableWriter, name: String,
+      postings: DataFrame, vocabBuckets: Int): Unit = {
+    writer.materialize(s"${name}_vocab_next",
+      postings.groupBy("term").agg(count(lit(1)).as("df"))
+        .withColumn("vocab_bucket",
+          pmod(xxhash64(col("term")), lit(vocabBuckets.toLong)).cast("int"))
+        .repartition(col("vocab_bucket")),
+      partitionBy = Seq("vocab_bucket"))
+    val live = new org.apache.hadoop.fs.Path(writer.path(s"${name}_vocab"))
+    val trash = Publish.trashOf(live)
+    val fs = live.getFileSystem(postings.sparkSession.sessionState.newHadoopConf())
+    Publish.recover(fs, live, trash)
+    Publish.swapIn(fs, new org.apache.hadoop.fs.Path(writer.path(s"${name}_vocab_next")),
+      live, trash)
+  }
+
   /** Merge a (term, df) delta into the bucketed vocab: only the buckets
     * the delta's terms hash into are read, merged (staged to disk —
     * the merge plan reads the files being overwritten), and
@@ -339,30 +360,18 @@ object Retrieval {
       .filter(col("df") > 0)
       .withColumn("vocab_bucket",
         pmod(xxhash64(col("term")), lit(vocabBuckets.toLong)).cast("int"))
-    // publish by stage-then-swap (TableWriter.swapStagedDirs): the merged
-    // buckets are physically written ONCE, partitioned — the old plan
-    // wrote them flat to a stage, read the stage back, and re-wrote
-    // everything under dynamic partition overwrite (every merged byte
-    // written twice plus an extra read and a distinct-collect job).
-    // The merge plan reads the very files being replaced, which is why
-    // the write lands in a stage dir first and reaches the live bucket
-    // dirs only as renames.
+    // the merge plan reads the very files being replaced, so the merged
+    // buckets are written ONCE to a stage and reach the live bucket dirs
+    // only as renames
     val stage = writer.path(s"__stage_vocab_$name")
-    val stageP = new org.apache.hadoop.fs.Path(stage)
     val root = new org.apache.hadoop.fs.Path(vocabPath)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val surviving: Set[Int] = try {
+    Publish.swapPartitions(root.getFileSystem(spark.sessionState.newHadoopConf()),
+        new org.apache.hadoop.fs.Path(stage), root, "vocab_bucket=") {
       merged.repartition(col("vocab_bucket")) // one file per bucket dir
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .partitionBy("vocab_bucket")
         .parquet(stage)
-      graft.sources.TableWriter
-        .swapStagedDirs(fs, stageP, root, "vocab_bucket=").toSet
-    } finally {
-      fs.delete(stageP, true)
-    }
-    touched.filterNot(surviving).foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(root, s"vocab_bucket=$b"), true)
+      Some(touched.map(_.toString).toSeq)
     }
   }
 
@@ -522,7 +531,7 @@ object Retrieval {
     val postRoot = path(s"${name}_postings")
 
     // ---- step 2: postings redo (O(batch), manifest-driven) ----
-    IndexProtocol.redoFromManifest(fs, stagedMf)
+    Publish.redoFromManifest(fs, stagedMf)
     val tfB = postingsOf(newDocs, idCol, textCol)
       .withColumn("term_bucket",
         pmod(xxhash64(col("term")), lit(buckets.toLong)).cast("int"))
@@ -567,7 +576,7 @@ object Retrieval {
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .partitionBy("term_bucket").parquet(stage.toString)
       }
-      IndexProtocol.moveStagedIn(fs, stage, postRoot,
+      Publish.moveStagedIn(fs, stage, postRoot,
         partitionPrefix = "term_bucket=", batchPrefix = s"b$batchId-",
         manifest = stagedMf)
       def writeStats(n: Long, s: Long): Unit =
@@ -577,15 +586,7 @@ object Retrieval {
       // bootstrap-crash recovery; batch-sized at bootstrap)
       def rebuildAllFromPostings(): Unit = {
         val written = writer.read(spark, s"${name}_postings")
-        writer.materialize(s"${name}_vocab_next",
-          written.groupBy("term").agg(count(lit(1)).as("df"))
-            .withColumn("vocab_bucket",
-              pmod(xxhash64(col("term")), lit(vocabBuckets.toLong)).cast("int"))
-            .repartition(col("vocab_bucket")),
-          partitionBy = Seq("vocab_bucket"))
-        val vDst = path(s"${name}_vocab")
-        fs.delete(vDst, true)
-        fs.rename(path(s"${name}_vocab_next"), vDst)
+        rebuildVocab(writer, name, written, vocabBuckets)
         val st = written.select(col("doc_id"), col("dl")).distinct()
           .agg(count(lit(1)).as("n"), sum(col("dl")).cast("long").as("s"))
           .collect()(0)
@@ -642,7 +643,7 @@ object Retrieval {
       live match {
         case None if !fs.exists(statsP) =>
           // BOOTSTRAP, first attempt: declare dirty BEFORE deriving
-          IndexProtocol.writeLinesAtomic(fs, dirty,
+          Publish.writeLinesAtomic(fs, dirty,
             Seq(batchId.toString, "bootstrap"))
           rebuildAllFromPostings()
         case Some(st) if st.lift(1).contains("bootstrap") =>
@@ -657,7 +658,7 @@ object Retrieval {
         case None =>
           // incremental: snapshot pre-merge stats INTO the flag first
           val (n0, s0) = readStatsDirect(writer, name)
-          IndexProtocol.writeLinesAtomic(fs, dirty,
+          Publish.writeLinesAtomic(fs, dirty,
             Seq(batchId.toString, s"$n0\t$s0"))
           // vocab merge ∥ stats write (guide §2.6): both live under the
           // SAME write-ahead dirty flag, and redelivery's bucket-scoped
@@ -717,12 +718,12 @@ object Retrieval {
       tfB.repartition(col("term_bucket"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .partitionBy("term_bucket").parquet(stage.toString)
-      IndexProtocol.moveStagedIn(fs, stage, path(s"${name}_postings"),
+      Publish.moveStagedIn(fs, stage, path(s"${name}_postings"),
         partitionPrefix = "term_bucket=", batchPrefix = s"b$batchId-",
         manifest = path(s"${name}_commits/staged_$batchId"))
       // step 3's write-ahead, then the merge "crashes": every vocab
       // bucket the batch touches is damaged, stats are garbage
-      IndexProtocol.writeLinesAtomic(fs, path(s"${name}_vocab_dirty"),
+      Publish.writeLinesAtomic(fs, path(s"${name}_vocab_dirty"),
         Seq(batchId.toString, s"$n0\t$s0"))
       val touched = tfB
         .select(pmod(xxhash64(col("term")), lit(vocabBuckets.toLong))
@@ -756,7 +757,7 @@ object Retrieval {
       .repartition(col("term_bucket"))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("term_bucket").parquet(stage.toString)
-    IndexProtocol.moveStagedIn(fs, stage, path(s"${name}_positions"),
+    Publish.moveStagedIn(fs, stage, path(s"${name}_positions"),
       partitionPrefix = "term_bucket=", batchPrefix = s"b$batchId-",
       manifest = path(s"${name}_pos_commits/staged_$batchId"))
   }
@@ -877,25 +878,16 @@ object Retrieval {
       val survivors = pruned
         .filter(col("term_bucket").isin(hit.toIndexedSeq: _*))
         .join(struck.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
-      // stage-then-swap (TableWriter.swapStagedDirs): survivors written
-      // ONCE, partitioned, instead of flat-stage + read-back + dynamic
-      // overwrite (twice the bytes plus an extra read and collect job)
+      // survivors written ONCE, partitioned, then swapped in
       val stage = writer.path(s"__stage_del_$name")
-      val stageP = new org.apache.hadoop.fs.Path(stage)
       val root = new org.apache.hadoop.fs.Path(postPath)
-      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-      val surviving: Set[Int] = try {
+      Publish.swapPartitions(root.getFileSystem(spark.sessionState.newHadoopConf()),
+          new org.apache.hadoop.fs.Path(stage), root, "term_bucket=") {
         survivors.repartition(col("term_bucket")) // one file per bucket
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .partitionBy("term_bucket")
           .parquet(stage)
-        graft.sources.TableWriter
-          .swapStagedDirs(fs, stageP, root, "term_bucket=").toSet
-      } finally {
-        fs.delete(stageP, true)
-      }
-      hit.filterNot(surviving).foreach { b =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, s"term_bucket=$b"), true)
+        Some(hit.map(_.toString).toSeq)
       }
 
       // vocab: dfs decremented by the struck per-term doc counts (struck
@@ -1004,7 +996,7 @@ object Retrieval {
             Seq("doc_id"), "left_semi")
       struck0.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(stage.toString)
-      if (!fs.rename(stage, struckDir))
+      if (!Publish.renameIfAbsent(fs, stage, struckDir))
         throw new java.io.IOException(
           s"deleteFromBm25IndexBatch: rename $stage -> $struckDir failed")
     }
@@ -1016,7 +1008,7 @@ object Retrieval {
     // ---- step 3: stats snapshot write-ahead (pre-delete, once) ----
     if (!fs.exists(state)) {
       val (oldN, oldS) = readStatsDirect(writer, name)
-      IndexProtocol.writeLinesAtomic(fs, state, Seq(s"$oldN\t$oldS"))
+      Publish.writeLinesAtomic(fs, state, Seq(s"$oldN\t$oldS"))
     }
     val Array(n0, s0) =
       IndexProtocol.readLines(fs, state).head.split("\t").map(_.toLong)
@@ -1030,22 +1022,16 @@ object Retrieval {
       .filter(col("term_bucket").isin(hit.toIndexedSeq: _*))
     val survivors = pruned
       .join(struck.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
-    // stage-then-swap (TableWriter.swapStagedDirs): survivors written
-    // ONCE, partitioned — see [[deleteFromBm25Index]]. Idempotent under
-    // replay: re-running the strike from any partial state re-stages
-    // the same survivors and re-swaps.
+    // survivors written ONCE, partitioned, then swapped in. Idempotent
+    // under replay: re-running the strike from any partial state
+    // re-stages the same survivors and re-swaps.
     val stage = path(s"__stage_delb${batchId}_$name")
-    val surviving: Set[Int] = try {
+    Publish.swapPartitions(fs, stage, postRoot, "term_bucket=") {
       survivors.repartition(col("term_bucket")) // one file per bucket
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .partitionBy("term_bucket")
         .parquet(stage.toString)
-      graft.sources.TableWriter
-        .swapStagedDirs(fs, stage, postRoot, "term_bucket=").toSet
-    } finally fs.delete(stage, true)
-    hit.filterNot(surviving).foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(postRoot, s"term_bucket=$b"),
-        true)
+      Some(hit.map(_.toString).toSeq)
     }
 
     // ---- step 5: recompute the struck terms' vocab buckets (exact,
@@ -1085,16 +1071,8 @@ object Retrieval {
       } finally recomputed.unpersist(blocking = false)
     } else {
       // non-divisible layout: exact full rebuild from the postings
-      writer.materialize(s"${name}_vocab_next",
-        spark.read.parquet(postRoot.toString)
-          .groupBy("term").agg(count(lit(1)).as("df"))
-          .withColumn("vocab_bucket",
-            pmod(xxhash64(col("term")), lit(vocabBuckets.toLong)).cast("int"))
-          .repartition(col("vocab_bucket")),
-        partitionBy = Seq("vocab_bucket"))
-      val vDst = path(s"${name}_vocab")
-      fs.delete(vDst, true)
-      fs.rename(path(s"${name}_vocab_next"), vDst)
+      rebuildVocab(writer, name, spark.read.parquet(postRoot.toString),
+        vocabBuckets)
     }
 
     // ---- step 6: stats from the snapshot + the struck set ----
@@ -1738,13 +1716,13 @@ object Retrieval {
       fs.delete(stagedMf, false); return
     }
     val posRoot = path(s"${name}_positions")
-    IndexProtocol.redoFromManifest(fs, stagedMf)
+    Publish.redoFromManifest(fs, stagedMf)
     val stage = path(s"__stage_pb${batchId}_$name")
     positionalPostings(newDocs, buckets, idCol, textCol)
       .repartition(col("term_bucket"))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("term_bucket").parquet(stage.toString)
-    IndexProtocol.moveStagedIn(fs, stage, posRoot,
+    Publish.moveStagedIn(fs, stage, posRoot,
       partitionPrefix = "term_bucket=", batchPrefix = s"b$batchId-",
       manifest = stagedMf)
     IndexProtocol.assertLease(fs, commitsDir, writerId, leaseEpoch,

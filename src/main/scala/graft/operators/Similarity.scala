@@ -4,6 +4,7 @@ import graft.functions.VectorFns
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.Publish
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`). Brute-force cosine top-k is the correctness baseline;
@@ -753,7 +754,7 @@ object Similarity {
       val listsRoot = path(s"${name}_lists")
       // redo a crashed attempt's moves from its own staged-file manifest
       // (O(batch): no list directory is listed)
-      IndexProtocol.redoFromManifest(fs, stagedMf)
+      Publish.redoFromManifest(fs, stagedMf)
       val centroids = writer.read(spark, s"${name}_centroids")
         .as[(Long, Seq[Double])].collect().sortBy(_._1).toSeq
       val stage = path(s"__stage_ib${batchId}_$name")
@@ -761,7 +762,7 @@ object Similarity {
         .repartition(col("cent_id"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .partitionBy("cent_id").parquet(stage.toString)
-      IndexProtocol.moveStagedIn(fs, stage, listsRoot,
+      Publish.moveStagedIn(fs, stage, listsRoot,
         partitionPrefix = "cent_id=", batchPrefix = s"b$batchId-",
         manifest = stagedMf)
     }
@@ -794,7 +795,7 @@ object Similarity {
       .repartition(col("cent_id"))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("cent_id").parquet(stage.toString)
-    IndexProtocol.moveStagedIn(fs, stage, path(s"${name}_lists"),
+    Publish.moveStagedIn(fs, stage, path(s"${name}_lists"),
       partitionPrefix = "cent_id=", batchPrefix = s"b$batchId-",
       manifest = path(s"${name}_ivf_commits/staged_$batchId"))
   }
@@ -1040,25 +1041,16 @@ object Similarity {
         .filter(col("cent_id").isin(affected.toIndexedSeq: _*))
       val survivors = lists
         .join(tombs.select(col("nbr_id")), Seq("nbr_id"), "left_anti")
-      // stage-then-swap (TableWriter.swapStagedDirs): survivors written
-      // ONCE, partitioned, instead of flat-stage + read-back + dynamic
-      // overwrite (twice the bytes plus an extra read and collect job)
+      // survivors written ONCE, partitioned, then swapped in
       val stage = writer.path(s"__stage_vacuum_$name")
-      val stageP = new org.apache.hadoop.fs.Path(stage)
       val root = new org.apache.hadoop.fs.Path(listsPath)
-      val surviving: Set[Long] = try {
+      Publish.swapPartitions(fs,
+          new org.apache.hadoop.fs.Path(stage), root, "cent_id=") {
         survivors.repartition(col("cent_id"))
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .partitionBy("cent_id")
           .parquet(stage)
-        graft.sources.TableWriter
-          .swapStagedDirs(fs, stageP, root, "cent_id=")
-          .map(_.toLong).toSet
-      } finally {
-        fs.delete(stageP, true)
-      }
-      affected.filterNot(surviving).foreach { c =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, s"cent_id=$c"), true)
+        Some(affected.map(_.toString).toSeq)
       }
       // post-rewrite verification (see Scaladoc): any tombstoned id still
       // physically present means a tombstone named the wrong list — keep

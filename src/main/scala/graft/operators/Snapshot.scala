@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.Publish
 
 /** dbt-style SCD Type-2 snapshots (`dbt snapshot`, check strategy): the
   * snapshot table carries every key's history as rows with
@@ -269,22 +270,9 @@ object SnapshotStore {
       name: String, key: String, upTo: java.sql.Date): Unit = {
     val root = new org.apache.hadoop.fs.Path(writer.path(name))
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    // recovery from a crash inside a previous vacuum's swap window: if
-    // the live `snap_run=upTo` dir went to trash but the staged
-    // replacement never moved in, restore the trash (undo) and redo the
-    // whole collapse — convergent, and reads were never wrong (the
-    // trash name is underscore-prefixed and '='-free, so discovery
-    // ignores it and the older run dirs still reconstruct the prefix...
-    // except the vacuumed delta itself, which is exactly why the undo
-    // runs BEFORE anything reads the table here).
-    if (fs.exists(root))
-      fs.listStatus(root).filter(_.getPath.getName.startsWith("_trash_snap_run_"))
-        .foreach { st =>
-          val live = new org.apache.hadoop.fs.Path(root,
-            "snap_run=" + st.getPath.getName.stripPrefix("_trash_snap_run_"))
-          if (!fs.exists(live)) fs.rename(st.getPath, live)
-          else fs.delete(st.getPath, true)
-        }
+    // undo a previous vacuum's torn swap BEFORE anything reads the
+    // table here: the trashed run dir holds a delta the collapse needs
+    if (fs.exists(root)) Publish.recoverPartitions(fs, root, "snap_run=")
     val full = writer.read(spark, name)
     val prefix = full.filter(col("snap_run") <= lit(upTo))
     // bounded collect: ≤ number of persisted runs
@@ -300,17 +288,11 @@ object SnapshotStore {
         .filter(col("__rn") === 1).drop("__rn").drop("snap_run")
       // SINGLE WRITE + RENAME SWAP (r13 verdict #6; guide §6): the
       // collapsed prefix is staged ONCE as a ready-made partition dir
-      // and published by renames — the old path wrote every surviving
-      // byte twice (flat stage, then read back through dynamic
-      // partition overwrite). The write must still stage first: the
-      // collapse plan reads the very partitions being replaced. Crash
-      // windows: before the trash rename — table untouched, stage
-      // swept next run; between trash and move-in — undone by the
-      // recovery above; after move-in — collapsed partition (at the
+      // (the collapse plan reads the very partitions being replaced)
+      // and swapped in. After the swap the collapsed partition (at the
       // highest prefix run date) supersedes every (key, valid_from) it
-      // shares with older run dirs, so reads stay correct and the
-      // re-run completes the deletes. Same protocol family as
-      // TableWriter.swapStagedDirs.
+      // shares with older run dirs, so reads stay correct and a re-run
+      // completes the deletes.
       val stage = new org.apache.hadoop.fs.Path(
         writer.path(s"__stage_vacuum_$name"))
       fs.delete(stage, true)
@@ -318,10 +300,7 @@ object SnapshotStore {
       try {
         collapsed.write.mode("overwrite").parquet(stagedPart.toString)
         val live = new org.apache.hadoop.fs.Path(root, s"snap_run=$upTo")
-        val trash = new org.apache.hadoop.fs.Path(root, s"_trash_snap_run_$upTo")
-        if (fs.exists(live)) fs.rename(live, trash)
-        fs.rename(stagedPart, live)
-        fs.delete(trash, true)
+        Publish.swapIn(fs, stagedPart, live, Publish.trashOf(live))
       } finally {
         fs.delete(stage, true)
       }

@@ -17,14 +17,14 @@ import org.apache.spark.sql.functions._
   * together — a torn refresh can never leave a view claiming the wrong
   * frontier. (Underscore-prefixed files are hidden from Spark's input
   * listing, so readers of the view parquet never see it.) The swap is
-  * RETAINING: `rename(view → view__old); rename(stage → view);
-  * delete(view__old)` — a crash between the renames leaves the PRIOR
-  * view intact under `__old`, which [[frontier]]/[[readView]] resolve
-  * transparently and the next [[refresh]] rolls back before folding
-  * just the tail — recovery is O(tail), never a full-feed rebuild
-  * (r10 verdict #6). The direct-path reader (the rewrite scanning the
-  * view parquet) sees a missing dir only inside the tiny between-
-  * renames window and falls back to a correct base scan.
+  * [[Publish.swapIn]] with `view__old` as its trash — a crash between
+  * the renames leaves the PRIOR view intact under `__old`, which
+  * [[frontier]]/[[readView]] resolve transparently and the next
+  * [[refresh]] rolls back ([[Publish.recover]]) before folding just the
+  * tail — recovery is O(tail), never a full-feed rebuild (r10 verdict
+  * #6). The direct-path reader (the rewrite scanning the view parquet)
+  * sees a missing dir only inside the tiny between-renames window and
+  * falls back to a correct base scan.
   *
   * A view that IS genuinely lost (both dirs gone) rebuilds from the
   * full feed — but only when the feed is complete: if the feed carries
@@ -133,17 +133,10 @@ object MvMaintain {
       mvPath: String, v: ViewDef, hooks: SwapHooks): Long = {
     val mvP = new org.apache.hadoop.fs.Path(mvPath)
     val fs = fsOf(spark, mvP)
-    // repair a torn swap FIRST: crash after both renames → `__old` is
-    // litter next to the committed new view (drop it); crash between
-    // them → the prior view survives under `__old` (roll it back), and
-    // this refresh folds just the tail from its frontier — O(tail)
-    // recovery, never a full-feed rebuild
-    val oldP = oldPath(mvPath)
-    if (fs.exists(oldP)) {
-      if (fs.exists(mvP)) fs.delete(oldP, true)
-      else require(fs.rename(oldP, mvP),
-        s"refresh: rollback rename $oldP -> $mvPath failed")
-    }
+    // repair a torn swap FIRST, so this refresh folds just the tail from
+    // the prior view's frontier — O(tail) recovery, never a full-feed
+    // rebuild
+    Publish.recover(fs, mvP, oldPath(mvPath))
     val fr = frontier(spark, mvPath)
     val ids = feedBatchIds(spark, feedRoot)
     require(ids.nonEmpty, s"refresh: no feed batches under $feedRoot")
@@ -211,16 +204,13 @@ object MvMaintain {
     }
   }
 
-  /** Stage → embed frontier → RETAINING swap: the prior view survives
-    * under `__old` until the new one is in place, so a crash at any
-    * point leaves a committed view readable (prior or new) — see the
-    * class doc. `__old` is dropped last (litter if we crash before).
+  /** Stage → embed frontier → retaining swap: a crash at any point
+    * leaves a committed view readable (prior or new) — see the class doc.
     */
   private def stageAndSwap(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, mvPath: String,
       alive: DataFrame, newFrontier: Long, hooks: SwapHooks): Unit = {
     val mvP = new org.apache.hadoop.fs.Path(mvPath)
-    val oldP = oldPath(mvPath)
     val tmp = s"${mvPath}__stage"
     val tmpPath = new org.apache.hadoop.fs.Path(tmp)
     if (fs.exists(tmpPath)) fs.delete(tmpPath, true)
@@ -231,14 +221,9 @@ object MvMaintain {
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     hooks.beforeSwap()
-    if (fs.exists(mvP)) {
-      require(fs.rename(mvP, oldP),
-        s"refresh: retain rename $mvPath -> $oldP failed")
-      hooks.betweenRenames()
+    Publish.withSwapHook(_ => hooks.betweenRenames()) {
+      Publish.swapIn(fs, tmpPath, mvP, oldPath(mvPath))
     }
-    require(fs.rename(tmpPath, mvP),
-      s"refresh: rename $tmp -> $mvPath failed")
-    fs.delete(oldP, true)
   }
 
   /** Refresh a view maintained over a [[VersionedTable]] — the TABLE-
@@ -266,12 +251,7 @@ object MvMaintain {
       hooks: SwapHooks): Long = {
     val mvP = new org.apache.hadoop.fs.Path(mvPath)
     val fs = fsOf(spark, mvP)
-    val oldP = oldPath(mvPath)
-    if (fs.exists(oldP)) { // torn-swap repair, as in [[refresh]]
-      if (fs.exists(mvP)) fs.delete(oldP, true)
-      else require(fs.rename(oldP, mvP),
-        s"refreshFromVersionedTable: rollback rename $oldP -> $mvPath failed")
-    }
+    Publish.recover(fs, mvP, oldPath(mvPath)) // torn-swap repair, as in [[refresh]]
     val latest = VersionedTable.latestVersion(spark, tableRoot).getOrElse(
       throw new IllegalArgumentException(
         s"refreshFromVersionedTable: no committed version at $tableRoot"))

@@ -78,27 +78,16 @@ final class TableWriter(warehouseDir: String) extends Serializable {
       name: String, entries: Map[Int, Seq[String]]): Unit = {
     val mf = manifestFile(name)
     if (entries.isEmpty) { fs.delete(mf, false); return } // fully materialized
-    // stage-then-rename, matching the bucket-swap atomicity discipline:
-    // truncating the live manifest in place would let a crash mid-write
-    // leave a valid-looking PREFIX manifest that readResolved would
-    // silently serve as a subset of the table's buckets
-    val tmp = new org.apache.hadoop.fs.Path(path(name), "._clone_manifest_tmp")
-    val out = fs.create(tmp, true)
-    try out.write(entries.toSeq.sortBy(_._1)
-      .flatMap { case (b, ps) => ps.sorted.map(p => s"$b\t$p") }
-      .mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    // ATOMIC replacing rename (FileContext + Options.Rename.OVERWRITE):
-    // a delete-then-rename pair would open a crash window with NO
-    // manifest at all, and manifest ABSENCE means "fully materialized"
-    // to readResolved — the clone would silently serve only its local
-    // buckets and drop every still-borrowed source bucket (r10 advisor).
-    // Supported on local/HDFS; an object-store deployment would use a
-    // conditional put here.
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      fs.getUri, fs.getConf)
-    fc.rename(fs.makeQualified(tmp), fs.makeQualified(mf),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    // atomic replace, never a delete-then-rename: truncating the live
+    // manifest in place would let a crash mid-write leave a valid-looking
+    // PREFIX manifest, and manifest ABSENCE means "fully materialized" to
+    // readResolved — either way the clone would silently serve a subset
+    // of its buckets (r10 advisor)
+    Publish.overwriteFile(fs,
+      new org.apache.hadoop.fs.Path(path(name), "._clone_manifest_tmp"), mf,
+      entries.toSeq.sortBy(_._1)
+        .flatMap { case (b, ps) => ps.sorted.map(p => s"$b\t$p") }
+        .mkString("", "\n", "\n").getBytes("UTF-8"))
   }
 
   /** Zero-copy clone of a [[mergeByKey]]-layout table: writes only the
@@ -298,21 +287,14 @@ final class TableWriter(warehouseDir: String) extends Serializable {
     val p = new org.apache.hadoop.fs.Path(path(name))
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     // stage first (writing the table in place would overwrite the path the
-    // merge plan itself is reading), then SWAP the staged bucket dirs into
-    // the table root — renames are metadata ops, so the touched-bucket
-    // content is physically written ONCE per merge instead of twice (the
-    // old dynamic-overwrite pass re-wrote the whole staged content). The
-    // repartition clusters each bucket into one task, so file count tracks
-    // buckets — without it every shuffle task fans a file into every
-    // bucket dir (tasks × buckets small files at scale). Old bucket
-    // content moves to an underscore-prefixed, '='-free trash name first
-    // (hidden from readers — partition discovery only keeps underscore
-    // dirs that look like partitions), so readers never see two
-    // generations of one bucket; a crash mid-swap leaves at most a
-    // briefly-missing bucket and trash that the next merge sweeps.
+    // merge plan itself is reading), then swap the staged bucket dirs in:
+    // the touched-bucket content is physically written ONCE per merge.
+    // The repartition clusters each bucket into one task, so file count
+    // tracks buckets — without it every shuffle task fans a file into
+    // every bucket dir (tasks × buckets small files at scale).
     val stage = path(s"__stage_$name")
-    val stageP = new org.apache.hadoop.fs.Path(stage)
-    try {
+    val swapped = Publish.swapPartitions(fs,
+        new org.apache.hadoop.fs.Path(stage), p, "__bucket=") {
       graft.operators.Parallelism.overlap(alongside()) {
         merged
           .repartition(col("__bucket"))
@@ -321,18 +303,11 @@ final class TableWriter(warehouseDir: String) extends Serializable {
           .parquet(stage)
       }
       if (!fs.exists(p)) fs.mkdirs(p)
-      val swapped = swapStagedDirs(fs, stageP, p, "__bucket=")
-      // COW bookkeeping on clones: swapped buckets are local now
-      dropManifestEntries(fs, name, swapped.toSet)
-    } finally {
-      fs.delete(stageP, true)
+      Some(Nil)
     }
+    // COW bookkeeping on clones: swapped buckets are local now
+    swapped.foreach(ids => dropManifestEntries(fs, name, ids.map(_.toInt)))
   }
-
-  private def swapStagedDirs(fs: org.apache.hadoop.fs.FileSystem,
-      stageP: org.apache.hadoop.fs.Path, dest: org.apache.hadoop.fs.Path,
-      prefix: String): Seq[Int] =
-    TableWriter.swapStagedDirs(fs, stageP, dest, prefix)
 
   /** Targeted delete-by-key on a [[mergeByKey]]-layout table — the
     * right-to-be-forgotten operator (at 100 TB, "delete these 10k user
@@ -386,15 +361,17 @@ final class TableWriter(warehouseDir: String) extends Serializable {
       key: String, alongside: () => Unit = () => ()): Unit = {
     import org.apache.spark.sql.functions._
     val stage = path(s"__stage_$name")
-    val stageP = new org.apache.hadoop.fs.Path(stage)
     val root = new org.apache.hadoop.fs.Path(path(name))
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    try {
+    // a bucket whose every row was doomed has no staged dir: the swap
+    // drops it
+    val rewritten = Publish.swapPartitions(fs,
+        new org.apache.hadoop.fs.Path(stage), root, "__bucket=") {
       // `alongside` (the CDC feed write, when the caller has one) runs
       // concurrently with the probe + staged survivor write (guide
       // §2.6) — both consume the same pinned/pruned inputs; the SWAP
       // (publication) waits for both, preserving feed-before-publish
-      val (_, hitOpt) = graft.operators.Parallelism.overlap(alongside()) {
+      graft.operators.Parallelism.overlap(alongside()) {
         // rewrite ONLY buckets that actually hold a doomed row — keys
         // absent from the table (and re-runs of the same delete) cost a
         // bucket-pruned semi-join probe, zero writes (bounded collect:
@@ -405,31 +382,18 @@ final class TableWriter(warehouseDir: String) extends Serializable {
         else {
           val existing = candidates.filter(col("__bucket").isin(hit.toIndexedSeq: _*))
           val survivors = existing.join(doomed.select(col(key)), Seq(key), "left_anti")
-          // stage-then-swap (see [[mergeStagedSwap]]): the survivors are
-          // physically written ONCE, partitioned by bucket — the old plan
-          // wrote them flat to a stage, then read the stage back and
-          // re-wrote everything under dynamic partition overwrite
-          // (see mergeByKey: cluster by bucket so file count tracks buckets)
+          // survivors written ONCE, clustered by bucket (see
+          // [[mergeStagedSwap]]), then swapped in
           survivors.repartition(col("__bucket"))
             .write.mode(SaveMode.Overwrite)
             .partitionBy("__bucket")
             .parquet(stage)
-          Some(hit)
+          Some(hit.map(_.toString).toSeq)
         }
-      }
-      hitOpt.foreach { hit =>
-        val surviving: Set[Int] =
-          swapStagedDirs(fs, stageP, root, "__bucket=").toSet
-        // a bucket whose every row was doomed has no staged dir — drop it
-        hit.filterNot(surviving).foreach { b =>
-          fs.delete(new org.apache.hadoop.fs.Path(root, s"__bucket=$b"), true)
-        }
-        // COW bookkeeping on clones: every hit bucket is now local (or gone)
-        dropManifestEntries(fs, name, hit.toSet)
-      }
-    } finally {
-      fs.delete(stageP, true)
+      }._2
     }
+    // COW bookkeeping on clones: every hit bucket is now local (or gone)
+    rewritten.foreach(ids => dropManifestEntries(fs, name, ids.map(_.toInt)))
   }
 
   /** Re-bucket a [[mergeByKey]]-layout table — the bucket-count
@@ -441,23 +405,23 @@ final class TableWriter(warehouseDir: String) extends Serializable {
     * that must touch every row): `__bucket` is re-derived with the same
     * `pmod(xxhash64(key), newBuckets)` the layout contract uses, so
     * every subsequent merge/delete/prune at `newBuckets` stays correct.
-    * Swap protocol: stage the new layout, move the live root to an
-    * underscore trash name, rename the stage in, drop the trash — a
-    * crash leaves either the old table plus a sweepable stage, or the
-    * new table plus sweepable trash, never a mix of generations.
+    * The new layout is staged, then published with [[Publish.swapIn]]
+    * under the table-level trash `_trash_rebucket_<name>`. A crash
+    * between the swap's renames leaves no table at `name` until the next
+    * rebucket call, which first restores (or drops) that trash.
     */
   def rebucket(spark: org.apache.spark.sql.SparkSession, name: String,
       key: String, newBuckets: Int): String = {
     import org.apache.spark.sql.functions._
     val p = new org.apache.hadoop.fs.Path(path(name))
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val trash = new org.apache.hadoop.fs.Path(
+      path(s"_trash_rebucket_$name"))
+    Publish.recover(fs, p, trash)
     require(fs.exists(p), s"rebucket: no table at ${path(name)}")
     val stage = path(s"__stage_rebucket_$name")
     val stageP = new org.apache.hadoop.fs.Path(stage)
-    val trash = new org.apache.hadoop.fs.Path(
-      path(s"_trash_rebucket_$name"))
     fs.delete(stageP, true)
-    fs.delete(trash, true)
     // resolve a clone manifest if present: rebucketing a clone is the
     // natural deep-clone conversion (full rewrite → fully local, and the
     // manifest is trashed with the old root)
@@ -469,9 +433,7 @@ final class TableWriter(warehouseDir: String) extends Serializable {
       .write.mode(SaveMode.Overwrite)
       .partitionBy("__bucket")
       .parquet(stage)
-    fs.rename(p, trash)
-    fs.rename(stageP, p)
-    fs.delete(trash, true)
+    Publish.swapIn(fs, stageP, p, trash)
     path(name)
   }
 
@@ -652,7 +614,7 @@ final class TableWriter(warehouseDir: String) extends Serializable {
       val prior = graft.operators.IndexProtocol
         .readLinesIfExists(fs, lwP).flatMap(_.headOption)
         .flatMap(s => scala.util.Try(s.toLong).toOption).getOrElse(Long.MinValue)
-      graft.operators.IndexProtocol.writeLinesAtomic(fs, lwP,
+      Publish.writeLinesAtomic(fs, lwP,
         Seq(math.max(prior, beforeBatchId).toString))
     }
     doomed.foreach { id =>
@@ -899,34 +861,5 @@ object TableWriter {
       case a: SubqueryAlias => cheapRescan(a.child)
       case _ => false
     }
-  }
-
-  /** Swap staged `<prefix><id>` partition dirs into `dest` via renames
-    * (old content trashed under an underscore-prefixed, '='-free name
-    * first — hidden from partition discovery — so readers never see two
-    * generations of one dir; a crash mid-swap leaves at most a briefly-
-    * missing dir and trash the next swap sweeps). Returns the swapped
-    * ids. Shared by the merge, delete, and index vocab-merge publish
-    * paths — the write-once alternative to dynamic partition overwrite,
-    * which forces the staged content through a second full write.
-    */
-  private[graft] def swapStagedDirs(fs: org.apache.hadoop.fs.FileSystem,
-      stageP: org.apache.hadoop.fs.Path, dest: org.apache.hadoop.fs.Path,
-      prefix: String): Seq[Int] = {
-    // sweep trash a previous crashed swap may have left
-    fs.listStatus(dest).filter(_.getPath.getName.startsWith("_trash_"))
-      .foreach(st => fs.delete(st.getPath, true))
-    fs.listStatus(stageP)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
-      .map { st =>
-        val bucketDir = st.getPath.getName
-        val dst = new org.apache.hadoop.fs.Path(dest, bucketDir)
-        val trash = new org.apache.hadoop.fs.Path(dest,
-          "_trash_" + bucketDir.replace("=", "_"))
-        if (fs.exists(dst)) fs.rename(dst, trash)
-        fs.rename(st.getPath, dst)
-        fs.delete(trash, true)
-        bucketDir.stripPrefix(prefix).toInt
-      }.toSeq
   }
 }

@@ -38,7 +38,7 @@ import graft.operators.IndexProtocol
   *   3. read the CURRENT committed state (manifest-resolved, touched
   *      buckets only) and compute the merged/surviving rows;
   *   4. stage the touched buckets, move them in under `v<N+1>-` names
-  *      guarded by `staged_<N+1>` ([[IndexProtocol.moveStagedIn]]);
+  *      guarded by `staged_<N+1>` ([[Publish.moveStagedIn]]);
   *      new files are invisible — no reader resolves them until…
   *   5. …the version manifest `v_<N+1>` (touched buckets' new files +
   *      untouched buckets' entries carried over verbatim) is renamed in
@@ -319,7 +319,7 @@ object VersionedTable {
       .foreach { n =>
         val k = n.stripPrefix("staged_")
         if (!names.contains(s"v_$k"))
-          IndexProtocol.redoFromManifest(fs, new Path(cd, n))
+          Publish.redoFromManifest(fs, new Path(cd, n))
         fs.delete(new Path(cd, n), false)
       }
   }
@@ -485,23 +485,30 @@ object VersionedTable {
     */
   private[graft] val checkpointEvery = 8
 
-  private def commitStaged(spark: SparkSession, fs: FileSystem, root: Path,
-      rootStr: String, next: Long, cur: Option[Long], touched: DataFrame,
-      hooks: CommitHooks, rewrittenBuckets: Option[Set[Int]] = None,
-      writerId: String = "default", epoch: Long = 0L): Unit = {
-    val stage = new Path(root, s"_stage_v$next")
+  /** Stage `touched` clustered per bucket (file count tracks buckets,
+    * see mergeByKey), then move it in under `<batchPrefix><i>` names
+    * guarded by `manifest`. Returns the new files per bucket.
+    */
+  private def stageAndMoveIn(fs: FileSystem, root: Path, stage: Path,
+      touched: DataFrame, batchPrefix: String, manifest: Path,
+      beforeMove: () => Unit): Map[Int, Seq[String]] = {
     fs.delete(stage, true)
-    // cluster per bucket: file count tracks buckets (see mergeByKey)
     touched.repartition(col("__bucket"))
       .write.mode(SaveMode.Overwrite)
       .partitionBy("__bucket")
       .parquet(stage.toString)
-    hooks.beforeMove()
-    val moved = IndexProtocol.moveStagedIn(fs, stage, root,
-      "__bucket=", s"v$next-", stagedPath(root, next))
-    val newEntries: Map[Int, Seq[String]] = moved
+    beforeMove()
+    Publish.moveStagedIn(fs, stage, root, "__bucket=", batchPrefix, manifest)
       .map(p => (bucketOf(p), fs.makeQualified(p).toString))
       .groupBy(_._1).map { case (b, ps) => b -> ps.map(_._2).sorted }
+  }
+
+  private def commitStaged(spark: SparkSession, fs: FileSystem, root: Path,
+      rootStr: String, next: Long, cur: Option[Long], touched: DataFrame,
+      hooks: CommitHooks, rewrittenBuckets: Option[Set[Int]] = None,
+      writerId: String = "default", epoch: Long = 0L): Unit = {
+    val newEntries = stageAndMoveIn(fs, root, new Path(root, s"_stage_v$next"),
+      touched, s"v$next-", stagedPath(root, next), hooks.beforeMove)
     val rewritten = rewrittenBuckets.getOrElse(newEntries.keySet)
     val schemaDdl = touched.schema.toDDL
     require(!schemaDdl.contains("\t") && !schemaDdl.contains("\n"),
@@ -529,7 +536,7 @@ object VersionedTable {
     // bumped the lease epoch) mid-commit must not publish its manifest
     IndexProtocol.assertLease(fs, commitsDir(root), writerId, epoch,
       s"commitStaged(v$next)")
-    IndexProtocol.writeLinesAtomic(fs, manifestPath(root, next),
+    Publish.writeLinesAtomic(fs, manifestPath(root, next),
       s"#graft.v2 ${if (isFull) "full" else "delta"} schema=$schemaDdl"
         +: body)
     invalidateManifest(root, next)
@@ -588,7 +595,7 @@ object VersionedTable {
       val m = parseManifest(fs, root, floor)
       if (!m.isFull) {
         val (entries, schemaDdl) = resolveManifest(fs, root, floor)
-        IndexProtocol.writeLinesAtomic(fs, manifestPath(root, floor),
+        Publish.writeLinesAtomic(fs, manifestPath(root, floor),
           s"#graft.v2 full schema=${schemaDdl.getOrElse("")}"
             +: entries.toSeq.sortBy(_._1)
               .flatMap { case (b, ps) => ps.sorted.map(p => s"$b\t$p") })
@@ -665,7 +672,7 @@ object VersionedTable {
       // first pin: concurrent optimistic bootstraps race on the shared
       // tmp name — losing the rename is benign (the winner wrote the
       // same file); what matters is the value we READ BACK
-      try IndexProtocol.writeLinesAtomic(fs, p, Seq(n.toString))
+      try Publish.writeLinesAtomic(fs, p, Seq(n.toString))
       catch { case _: java.io.IOException | _: java.io.FileNotFoundException => () }
       recorded()
     }
@@ -720,12 +727,12 @@ object VersionedTable {
       // the fence, hash its keys under the wrong count, and commit
       // duplicate keys. With the intent on disk, [[pinBucketCount]]
       // refuses loudly until a re-run of rebucket confirms the flip.
-      IndexProtocol.writeLinesAtomic(fs, rebucketIntentPath(root),
+      Publish.writeLinesAtomic(fs, rebucketIntentPath(root),
         Seq(newNumBuckets.toString))
       commitStaged(spark, fs, root, rootStr, cur + 1, Some(cur), touched,
         CommitHooks.none, rewrittenBuckets = Some(oldBuckets),
         writerId = writerId, epoch = epoch)
-      IndexProtocol.writeLinesAtomic(fs,
+      Publish.writeLinesAtomic(fs,
         new Path(commitsDir(root), "buckets"), Seq(newNumBuckets.toString))
       fs.delete(rebucketIntentPath(root), false)
       cur + 1
@@ -973,17 +980,8 @@ object VersionedTable {
       s"writerId must be path/manifest-safe: '$writerId'")
     val marker = occStagedPath(root, writerId)
     val attempt = s"occ-$writerId-r${readV.getOrElse(-1L)}-"
-    val stage = new Path(root, s"_stage_$attempt")
-    fs.delete(stage, true)
-    touched.repartition(col("__bucket"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("__bucket")
-      .parquet(stage.toString)
-    val moved = IndexProtocol.moveStagedIn(fs, stage, root,
-      "__bucket=", attempt, marker)
-    val newEntries: Map[Int, Seq[String]] = moved
-      .map(p => (bucketOf(p), fs.makeQualified(p).toString))
-      .groupBy(_._1).map { case (b, ps) => b -> ps.map(_._2).sorted }
+    val newEntries = stageAndMoveIn(fs, root, new Path(root, s"_stage_$attempt"),
+      touched, attempt, marker, () => ())
     val myBuckets = rewrittenBuckets.getOrElse(newEntries.keySet)
     val schemaDdl = touched.schema.toDDL
     require(!schemaDdl.contains("\t") && !schemaDdl.contains("\n"),
@@ -991,7 +989,7 @@ object VersionedTable {
     hooks.beforePublish()
 
     def abortConflict(since: Long, overlap: Set[Int]): Nothing = {
-      IndexProtocol.redoFromManifest(fs, marker)
+      Publish.redoFromManifest(fs, marker)
       fs.delete(marker, false)
       throw new CommitConflictException(
         s"optimistic commit by '$writerId' on $rootStr conflicts: " +
@@ -1015,7 +1013,7 @@ object VersionedTable {
               // conflict set is undecidable against a vacuumed snapshot.
               // Clean up like any other conflict instead of leaking the
               // staged marker behind a raw missing-manifest error.
-              IndexProtocol.redoFromManifest(fs, marker)
+              Publish.redoFromManifest(fs, marker)
               fs.delete(marker, false)
               throw new CommitConflictException(
                 s"optimistic commit by '$writerId' on $rootStr cannot " +
@@ -1051,7 +1049,7 @@ object VersionedTable {
         // under it could land a version the vacuum's sweep never saw.
         // Checked INSIDE the lock so it orders against vacuum's pass.
         if (fs.exists(new Path(commitsDir(root), "writer"))) {
-          IndexProtocol.redoFromManifest(fs, marker)
+          Publish.redoFromManifest(fs, marker)
           fs.delete(marker, false)
           throw new CommitConflictException(
             s"optimistic commit by '$writerId' on $rootStr aborted: a " +
@@ -1066,12 +1064,11 @@ object VersionedTable {
           // exists-check + in-JVM lock arbitrates WRITERS (exact in
           // one JVM; rename-no-replace on HDFS; conditional put on
           // object stores — see [[occLock]])
-          val tmp = new Path(commitsDir(root), s".v_$next.$writerId.tmp")
-          val out = fs.create(tmp, true)
-          try out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8"))
-          finally out.close()
-          if (!fs.rename(tmp, target)) { fs.delete(tmp, false); false }
-          else { invalidateManifest(root, next); true }
+          val won = Publish.writeFile(fs,
+            new Path(commitsDir(root), s".v_$next.$writerId.tmp"), target,
+            lines.mkString("", "\n", "\n").getBytes("UTF-8"), replace = false)
+          if (won) invalidateManifest(root, next)
+          won
         }
       }
       if (won) {
@@ -1081,7 +1078,7 @@ object VersionedTable {
       }
       rebases += 1
       if (rebases > maxRebase) {
-        IndexProtocol.redoFromManifest(fs, marker)
+        Publish.redoFromManifest(fs, marker)
         fs.delete(marker, false)
         throw new CommitConflictException(
           s"optimistic commit by '$writerId' on $rootStr lost the " +

@@ -86,7 +86,7 @@ class LeaseLivenessSpec extends SparkSpec {
     val dir = tmpDir("lease")
     val fs = fsFor(dir)
     val commits = new Path(dir, "commits")
-    IndexProtocol.writeLinesAtomic(fs, new Path(commits, "writer"),
+    graft.sources.Publish.writeLinesAtomic(fs, new Path(commits, "writer"),
       Seq("old-writer")) // pre-liveness format: id only
     assert(IndexProtocol.acquireLease(fs, commits, "old-writer", "spec") == 0L)
     backdate(commits.toString, "writer", byMs = 60000)

@@ -326,7 +326,7 @@ class VersionedTableSpec extends SparkSpec {
     val rootP = new org.apache.hadoop.fs.Path(root)
     val fs = rootP.getFileSystem(spark.sessionState.newHadoopConf())
     val intent = new org.apache.hadoop.fs.Path(s"$root/_commits/rebucket_intent")
-    graft.operators.IndexProtocol.writeLinesAtomic(fs, intent, Seq("16"))
+    graft.sources.Publish.writeLinesAtomic(fs, intent, Seq("16"))
     val eOld = intercept[IllegalStateException] {
       VersionedTable.commitMerge(spark, root,
         Seq((99L, 5L)).toDF("k", "price"), "k", 4)
