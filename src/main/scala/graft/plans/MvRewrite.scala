@@ -81,9 +81,19 @@ object MvRegistry {
     def isDynamic: Boolean = frontier == CompDef.Dynamic
     /** Versioned-table mode: `feedRoot` is a
       * [[graft.sources.VersionedTable]] root, `frontier` a VERSION id,
-      * and the compensation tail is the manifest-derived CDF
-      * (`changesBetween(frontier, latest)`) — no feed maintained at
-      * write time at all.
+      * and the compensation tail is derived from the manifests — no
+      * feed maintained at write time at all. Which tail:
+      *   - a query with no MIN/MAX folds the GROSS churn of the changed
+      *     buckets (`churnBetween`: their rows at the frontier as
+      *     deletes, at the pinned version as inserts — two plain scans).
+      *     Rows a bucket rewrite carried unchanged appear on both sides;
+      *     they cancel because every fold such a query runs is additive
+      *     (COUNT, decimal/integral SUM and AVG — a double SUM never
+      *     rewrites);
+      *   - a query with MIN/MAX folds the NET diff (`changesBetween`, a
+      *     full-outer compare): extrema do not cancel, and the
+      *     touched-grain recompute must see only grains whose rows
+      *     really changed.
       */
     def isVt: Boolean = vtKey.nonEmpty
   }
@@ -92,10 +102,12 @@ object MvRegistry {
     def dynamic(feedRoot: String): CompDef = CompDef(feedRoot, Dynamic)
     /** Compensate from a VersionedTable's commit history: the view
       * holds the aggregate AS OF `version`, and queries against the
-      * table's LATEST state fold the manifest CDF past it. The rewrite
-      * verifies the query's scan pins exactly the latest version's
-      * file set (a commit racing the read makes it fall through to the
-      * base scan — correct either way, never a mixed answer).
+      * table's LATEST state fold the changes past it — the gross bucket
+      * churn for additive queries, the net diff for MIN/MAX ([[isVt]]).
+      * The rewrite verifies the query's scan pins exactly one retained
+      * version's file set (a commit racing the read makes it fall
+      * through to the base scan — correct either way, never a mixed
+      * answer).
       */
     def versioned(tableRoot: String, key: String, version: Long): CompDef =
       CompDef(tableRoot, version, vtKey = key)
@@ -104,8 +116,9 @@ object MvRegistry {
       * own in-dir `_frontier` — the pair
       * [[graft.sources.MvMaintain.refreshFromVersionedTable]] commits
       * atomically. Register once, refresh on any cadence; queries stay
-      * exactly fresh via the manifest-CDF tail past whatever version
-      * the last committed refresh folded.
+      * exactly fresh via the manifest-derived tail ([[isVt]]: gross
+      * churn or net diff) past whatever version the last committed
+      * refresh folded.
       */
     def versionedDynamic(tableRoot: String, key: String): CompDef =
       CompDef(tableRoot, Dynamic, vtKey = key)
@@ -564,13 +577,15 @@ case class MvRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       case Some(c) =>
         // the compensation tail: change rows past the frontier, either
         // from a maintained CDC feed (batch dirs) or — vt mode — from
-        // the VersionedTable's manifest CDF, where the frontier is a
-        // VERSION id and no feed exists at all. In vt mode the rewrite
-        // additionally verifies the query's scan pins EXACTLY the
-        // latest version's file set: a commit racing the user's read
-        // would otherwise compensate to a different version than the
-        // scan serves — the mismatch throws, tryRewriteSafely falls
-        // back to the (correct) base scan.
+        // the VersionedTable's manifests, where the frontier is a
+        // VERSION id and no feed exists at all (the gross bucket churn
+        // for additive queries, the net diff for MIN/MAX — see
+        // CompDef.isVt). In vt mode the rewrite additionally verifies
+        // the query's scan pins EXACTLY one retained version's file
+        // set: a commit racing the user's read would otherwise
+        // compensate to a different version than the scan serves — the
+        // mismatch throws, tryRewriteSafely falls back to the (correct)
+        // base scan.
         val tailOpt: Option[DataFrame] =
           if (c.isVt) {
             import graft.sources.VersionedTable
@@ -599,10 +614,18 @@ case class MvRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
                 s"matches no retained version of ${c.feedRoot} — base " +
                 "scan answers instead"))
             val f = resolvedFrontier.get
+            // without extrema every fold below is additive (COUNT, exact-
+            // type SUM/AVG — see tryRewrite), so the gross bucket churn
+            // serves; the touched-grain extrema recompute needs the net
+            // diff's row-level changes
+            def cdf(from: Long, to: Long): DataFrame =
+              if (wantMin.isEmpty && wantMax.isEmpty)
+                VersionedTable.churnBetween(spark, c.feedRoot, from, to,
+                  grain ++ mv.sumCols.keys.toSeq.sorted)
+              else VersionedTable.changesBetween(spark, c.feedRoot, c.vtKey,
+                from, to)
             if (target == f) None
-            else if (target > f)
-              Some(VersionedTable.changesBetween(
-                spark, c.feedRoot, c.vtKey, f, target))
+            else if (target > f) Some(cdf(f, target))
             else {
               // backward: the view already folded (target, f]; subtract
               // it by replaying the diff with the op VOCABULARY inverted
@@ -614,9 +637,7 @@ case class MvRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
                 .when(col("change_op") === "delete", "insert")
                 .when(col("change_op") === "update_pre", "update_post")
                 .otherwise("update_pre")
-              Some(VersionedTable.changesBetween(
-                  spark, c.feedRoot, c.vtKey, target, f)
-                .withColumn("change_op", inv))
+              Some(cdf(target, f).withColumn("change_op", inv))
             }
           } else {
             val tailDirs = feedBatchDirsPast(c.feedRoot, resolvedFrontier.get)
@@ -843,17 +864,6 @@ case class MvRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       AggregateExpression(Sum(col), Complete, isDistinct = false)
     def aggOf(f: AggregateFunction): Expression =
       AggregateExpression(f, Complete, isDistinct = false)
-    // SUM/AVG rewrites only for exactly-additive types: decimal and
-    // integral partials re-fold to the identical value under any
-    // grouping; double sums are order-dependent IEEE folds and the
-    // re-folded partials could differ from the base's row fold in the
-    // last ulp — those fall through to the base scan
-    def additive(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-      case _: org.apache.spark.sql.types.DecimalType => true
-      case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
 
     // every output must be a grouped column or a derivable aggregate:
     // COUNT(1), SUM/MIN/MAX(measure), AVG(declared non-null decimal);
@@ -923,7 +933,9 @@ case class MvRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       case al @ Alias(
           AggregateExpression(Sum(attr: AttributeReference, _), Complete, false, None, _),
           name) if !fromDim(attr) && mv.sumCols.contains(attr.name)
-            && additive(al.dataType) =>
+            && graft.sources.MvMaintain.additive(al.dataType) =>
+        // exactly-additive types only: a double SUM's re-folded partials
+        // can differ from the base's row fold, so it falls through
         val s = sumOf(pAttr(sumCol(attr.name)))
         Some(Alias(castTo(s, al.dataType), name)(exprId = al.exprId))
       case al @ Alias(

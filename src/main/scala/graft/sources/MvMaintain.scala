@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, IntegerType,
+  LongType, ShortType, StructType}
 
 /** Incremental maintenance of a grain-keyed COUNT/SUM summary view from
   * a CDC change feed — the REFRESH half of the MV story (q91 proved the
@@ -163,19 +165,49 @@ object MvMaintain {
 
     val tail = spark.read.parquet(
       tailIds.map(id => s"$feedRoot/batch=$id"): _*)
-    val merged = foldInto(spark, mvPath, fr.isDefined, tail, v)
+    val merged = foldInto(
+      Option.when(fr.isDefined)(spark.read.parquet(mvPath)), tail, v)
     stageAndSwap(spark, fs, mvPath, merged.filter(col(v.countCol) > 0),
       newFrontier, hooks)
     newFrontier
   }
+
+  /** Whether a signed fold of values of type `dt` is exact in any
+    * order and grouping: decimal and integral sums are; double sums are
+    * order-dependent IEEE folds whose re-folded partials can differ from
+    * a row-by-row fold in the last ulp. The MV rewrite serves SUM/AVG
+    * only over such types, and only such folds may consume the gross
+    * [[VersionedTable.churnBetween]] tail, where a rewritten-but-equal
+    * row is added and subtracted instead of skipped.
+    */
+  private[graft] def additive(dt: DataType): Boolean = dt match {
+    case _: DecimalType => true
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
+  /** The change rows a [[refreshFromVersionedTable]] folds between two
+    * versions: the gross bucket churn ([[VersionedTable.churnBetween]])
+    * when every sum column of the view (schema `view`) is [[additive]],
+    * else the net diff ([[VersionedTable.changesBetween]]) — a double
+    * sum re-folded from the churn adds and subtracts every carried row
+    * and could drift from a bootstrap in the last ulp.
+    */
+  private[graft] def versionedTail(spark: SparkSession, tableRoot: String,
+      key: String, fromV: Long, toV: Long, view: StructType,
+      v: ViewDef): DataFrame =
+    if (v.sumCols.values.forall(s => additive(view(s).dataType)))
+      VersionedTable.churnBetween(spark, tableRoot, fromV, toV,
+        v.grain ++ v.sumCols.keys.toSeq.sorted)
+    else VersionedTable.changesBetween(spark, tableRoot, key, fromV, toV)
 
   /** Signed per-grain deltas of a CDC tail folded into the existing
     * view (or standing alone when no view exists yet). Column types
     * stay pinned to the first-committed view schema, so refresh ==
     * full-refold frame-for-frame at any depth.
     */
-  private def foldInto(spark: SparkSession, mvPath: String,
-      haveView: Boolean, tail: DataFrame, v: ViewDef): DataFrame = {
+  private def foldInto(view: Option[DataFrame], tail: DataFrame,
+      v: ViewDef): DataFrame = {
     val pos = col("change_op").isin("insert", "update_post")
     val sign = when(pos, lit(1L)).otherwise(lit(-1L))
     val mKeys = v.sumCols.keys.toSeq.sorted
@@ -183,12 +215,12 @@ object MvMaintain {
       .agg(sum(sign).as("__dn"),
         mKeys.map(m => sum(when(pos, col(m)).otherwise(-col(m)))
           .as(s"__d_$m")): _*)
-    if (!haveView)
+    if (view.isEmpty)
       deltas.select(v.grain.map(col) ++
         Seq(col("__dn").as(v.countCol)) ++
         mKeys.map(m => col(s"__d_$m").as(v.sumCols(m))): _*)
     else {
-      val old = spark.read.parquet(mvPath)
+      val old = view.get
       val schema = old.schema
       old.join(deltas, v.grain, "full_outer")
         .select(v.grain.map(col) ++
@@ -228,10 +260,13 @@ object MvMaintain {
 
   /** Refresh a view maintained over a [[VersionedTable]] — the TABLE-
     * LAYER twin of [[refresh]]: the frontier is a VERSION id, the tail
-    * is the manifest-derived CDF
-    * ([[VersionedTable.changesBetween]](frontier, latest) — bucket-
-    * pruned, no feed maintained anywhere), and a view with no committed
-    * frontier BOOTSTRAPS from the table's latest snapshot (a one-time
+    * is derived from the manifests between frontier and latest (bucket-
+    * pruned, no feed maintained anywhere) — the gross churn of the
+    * changed buckets when every view sum column is decimal or integral
+    * (rows a bucket rewrite carried unchanged cancel exactly in the
+    * signed fold), the net diff otherwise, so a double-sum view folds
+    * only rows that really changed ([[versionedTail]]). A view with no
+    * committed frontier BOOTSTRAPS from the table's latest snapshot (a one-time
     * base aggregate — always legal because the snapshot is complete,
     * unlike a possibly-truncated feed). Same retaining-swap durability;
     * same O(|tail| + |grain|) steady cost. Composes with
@@ -258,9 +293,9 @@ object MvMaintain {
     frontier(spark, mvPath) match {
       case Some(f) if f >= latest => f
       case Some(f) =>
-        val tail = VersionedTable.changesBetween(spark, tableRoot, key,
-          f, latest)
-        val merged = foldInto(spark, mvPath, haveView = true, tail, v)
+        val view = spark.read.parquet(mvPath)
+        val merged = foldInto(Some(view),
+          versionedTail(spark, tableRoot, key, f, latest, view.schema, v), v)
         stageAndSwap(spark, fs, mvPath,
           merged.filter(col(v.countCol) > 0), latest, hooks)
         latest

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 import graft.operators.IndexProtocol
 
@@ -66,11 +67,14 @@ import graft.operators.IndexProtocol
   * one-bucket commit writes bytes proportional to ONE bucket, not
   * 600 MB). [[vacuum]] re-anchors the retention floor as a checkpoint
   * before dropping older manifests, so every retained version stays
-  * resolvable. Every manifest records the version's schema DDL, which
-  * is also what makes a legally EMPTY version (delete-all) readable.
-  * Reads with `mergeSchema` touch every file's footer once; a
-  * deployment past that serves the scan schema from the manifest's
-  * recorded DDL directly (as table formats do).
+  * resolvable. Every manifest records the table's full schema DDL at
+  * that version (the prior version's columns merged with the commit's
+  * own, so a bucket-pruned commit never drops a column only other
+  * buckets hold), and [[read]] plans its scan from that DDL — no data
+  * file's footer is opened and no schema-merging Spark job runs, at any
+  * file count (as table formats do). The DDL is also what makes a
+  * legally EMPTY version (delete-all) readable. Only legacy schema-less
+  * manifests still read with `mergeSchema`.
   */
 object VersionedTable {
 
@@ -249,8 +253,11 @@ object VersionedTable {
     * commits are invisible, torn states unobservable. Reading a
     * vacuumed version refuses loudly, naming the retained floor.
     * `buckets` restricts to those bucket ids (the pruned read the
-    * commit paths use). `mergeSchema` spans schema evolution: files
-    * older than an additive column null-fill it.
+    * commit paths use). The scan schema is the version's recorded DDL
+    * ([[scanSchema]]), so planning the read opens no data file and runs
+    * no Spark job; it spans schema evolution, since files older than an
+    * additive column null-fill it. A legacy schema-less manifest falls
+    * back to a `mergeSchema` read of the selected files.
     */
   def read(spark: SparkSession, rootStr: String,
       asOf: Option[Long] = None,
@@ -273,31 +280,59 @@ object VersionedTable {
       case None => entries
     }
     val files = selected.toSeq.flatMap(_._2).sorted
-    if (files.isEmpty) {
-      // none of the selected buckets exist at this version — empty
-      // frame with the table schema: from the manifest's recorded DDL
-      // (which also makes a LEGALLY EMPTY version readable — a
-      // delete-all commit used to wedge the table on `has no files`),
-      // else from any committed file (legacy manifests)
-      schemaDdl match {
-        case Some(ddl) =>
-          spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-            org.apache.spark.sql.types.StructType.fromDDL(ddl))
-            .withColumn("__bucket", col("__bucket").cast("int"))
-        case None =>
-          val any = entries.toSeq.flatMap(_._2).sorted
-          require(any.nonEmpty,
-            s"version $v of $rootStr has no files and no recorded schema " +
-              "(legacy empty manifest)")
-          spark.read.option("basePath", rootStr).parquet(any.head).limit(0)
-            .withColumn("__bucket", col("__bucket").cast("int"))
-      }
-    } else {
-      spark.read.option("basePath", rootStr)
-        .option("mergeSchema", "true")
-        .parquet(files: _*)
-        .withColumn("__bucket", col("__bucket").cast("int"))
+    (schemaDdl.map(scanSchema), files.isEmpty) match {
+      case (Some(schema), false) =>
+        spark.read.schema(schema).option("basePath", rootStr).parquet(files: _*)
+      // none of the selected buckets exist at this version (or it is a
+      // LEGALLY EMPTY delete-all version, which used to wedge the table
+      // on `has no files`) — an empty frame with the table schema
+      case (Some(schema), true) =>
+        spark.createDataFrame(
+          new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
+      // legacy schema-less manifests: the schema comes from the files
+      case (None, false) =>
+        spark.read.option("basePath", rootStr)
+          .option("mergeSchema", "true")
+          .parquet(files: _*)
+          .withColumn("__bucket", col("__bucket").cast("int"))
+      case (None, true) =>
+        val any = entries.toSeq.flatMap(_._2).sorted
+        require(any.nonEmpty,
+          s"version $v of $rootStr has no files and no recorded schema " +
+            "(legacy empty manifest)")
+        spark.read.option("basePath", rootStr).parquet(any.head).limit(0)
+          .withColumn("__bucket", col("__bucket").cast("int"))
     }
+  }
+
+  /** The scan schema a recorded DDL describes, shaped as a `mergeSchema`
+    * read of the same files comes out: the data columns in table order,
+    * nullable, then the `__bucket` partition column as a nullable int.
+    */
+  private def scanSchema(ddl: String): StructType = {
+    val data = StructType.fromDDL(ddl).fields.filterNot(_.name == "__bucket")
+    org.apache.spark.sql.GraftExpressionBridge.asNullable(
+      StructType(data :+ StructField("__bucket", IntegerType)))
+  }
+
+  /** The DDL a commit records: the table's full schema. That is the
+    * prior version's columns in their order (typed as `touched` writes
+    * them where it has them), then the columns new in `touched`. A
+    * bucket-pruned commit's own frame can lack a column that only
+    * other buckets hold; recording that frame's schema alone would
+    * drop the column from every read planned from a later DDL.
+    */
+  private def recordedDdl(prior: Option[StructType],
+      touched: StructType): String = {
+    val merged = prior.fold(touched) { p =>
+      val written = touched.fields.map(f => f.name -> f).toMap
+      StructType(p.fields.map(f => written.getOrElse(f.name, f)) ++
+        touched.fields.filterNot(f => p.fieldNames.contains(f.name)))
+    }
+    val ddl = merged.toDDL
+    require(!ddl.contains("\t") && !ddl.contains("\n"),
+      s"schema DDL not manifest-safe: $ddl")
+    ddl
   }
 
   /** Sweep every crashed attempt: a `staged_<k>` whose `v_<k>` manifest
@@ -363,8 +398,8 @@ object VersionedTable {
     * per key), same touched-bucket cost — plus the commit protocol
     * above. Returns the committed version id. Additive schema
     * evolution is supported: an incoming frame with new columns
-    * null-fills existing rows (old files stay byte-stable; reads
-    * mergeSchema across generations).
+    * null-fills existing rows (old files stay byte-stable; the recorded
+    * DDL gains the column, and reads null-fill it in older generations).
     */
   def commitMerge(spark: SparkSession, rootStr: String, incoming: DataFrame,
       key: String, numBuckets: Int = 16, writerId: String = "default",
@@ -403,16 +438,16 @@ object VersionedTable {
           val affected = pinned.select("__bucket").distinct()
             .collect().map(_.getInt(0)).toIndexedSeq
           val existing = read(spark, rootStr, Some(v), Some(affected))
-            .withColumn("__gen", lit(0))
           val w = Window.partitionBy(col(key)).orderBy(
             (if (resolveOrder.nonEmpty) resolveOrder
              else Seq(col("__gen").desc)): _*)
-          val merged = existing
+          val merged = existing.withColumn("__gen", lit(0))
             .unionByName(pinned, allowMissingColumns = true)
             .withColumn("__rn", row_number().over(w))
             .filter(col("__rn") === 1).drop("__rn")
           commitStaged(spark, fs, root, rootStr, next, cur,
-            merged.drop("__gen"), hooks, writerId = writerId, epoch = epoch)
+            merged.drop("__gen"), hooks, writerId = writerId, epoch = epoch,
+            prior = Some(existing.schema))
         } finally release()
     }
     next
@@ -466,7 +501,7 @@ object VersionedTable {
           .join(doomed.select(col(key)), Seq(key), "left_anti")
         commitStaged(spark, fs, root, rootStr, next, cur, survivors, hooks,
           rewrittenBuckets = Some(hit.toSet), writerId = writerId,
-          epoch = epoch)
+          epoch = epoch, prior = Some(candidates.schema))
         next
       } finally releaseCand()
     } finally releaseDoomed()
@@ -506,13 +541,12 @@ object VersionedTable {
   private def commitStaged(spark: SparkSession, fs: FileSystem, root: Path,
       rootStr: String, next: Long, cur: Option[Long], touched: DataFrame,
       hooks: CommitHooks, rewrittenBuckets: Option[Set[Int]] = None,
-      writerId: String = "default", epoch: Long = 0L): Unit = {
+      writerId: String = "default", epoch: Long = 0L,
+      prior: Option[StructType] = None): Unit = {
     val newEntries = stageAndMoveIn(fs, root, new Path(root, s"_stage_v$next"),
       touched, s"v$next-", stagedPath(root, next), hooks.beforeMove)
     val rewritten = rewrittenBuckets.getOrElse(newEntries.keySet)
-    val schemaDdl = touched.schema.toDDL
-    require(!schemaDdl.contains("\t") && !schemaDdl.contains("\n"),
-      s"schema DDL not manifest-safe: $schemaDdl")
+    val schemaDdl = recordedDdl(prior, touched.schema)
     val isFull = cur.isEmpty || next % checkpointEvery == 0
     val body: Seq[String] =
       if (isFull) {
@@ -901,7 +935,7 @@ object VersionedTable {
     readV match {
       case None =>
         occPublish(spark, fs, root, rootStr, readV, withBucket.drop("__gen"),
-          rewrittenBuckets = None, writerId, hooks, maxRebase)
+          rewrittenBuckets = None, writerId, hooks, maxRebase, prior = None)
       case Some(v) =>
         // pin the batch: the affected-bucket collect and the staged write
         // both consume it (see commitMerge — same discipline; gated by
@@ -912,15 +946,16 @@ object VersionedTable {
           val affected = pinned.select("__bucket").distinct()
             .collect().map(_.getInt(0)).toIndexedSeq
           val existing = read(spark, rootStr, Some(v), Some(affected))
-            .withColumn("__gen", lit(0))
           val w = Window.partitionBy(col(key)).orderBy(
             (if (resolveOrder.nonEmpty) resolveOrder
              else Seq(col("__gen").desc)): _*)
-          val merged = existing.unionByName(pinned, allowMissingColumns = true)
+          val merged = existing.withColumn("__gen", lit(0))
+            .unionByName(pinned, allowMissingColumns = true)
             .withColumn("__rn", row_number().over(w))
             .filter(col("__rn") === 1).drop("__rn")
           occPublish(spark, fs, root, rootStr, readV, merged.drop("__gen"),
-            rewrittenBuckets = None, writerId, hooks, maxRebase)
+            rewrittenBuckets = None, writerId, hooks, maxRebase,
+            prior = Some(existing.schema))
         } finally release()
     }
   }
@@ -963,7 +998,8 @@ object VersionedTable {
         val survivors = candidates.filter(col("__bucket").isin(hit: _*))
           .join(doomed.select(col(key)), Seq(key), "left_anti")
         occPublish(spark, fs, root, rootStr, readV, survivors,
-          rewrittenBuckets = Some(hit.toSet), writerId, hooks, maxRebase)
+          rewrittenBuckets = Some(hit.toSet), writerId, hooks, maxRebase,
+          prior = Some(candidates.schema))
       } finally releaseCand()
     } finally releaseDoomed()
   }
@@ -975,7 +1011,7 @@ object VersionedTable {
   private def occPublish(spark: SparkSession, fs: FileSystem, root: Path,
       rootStr: String, readV: Option[Long], touched: DataFrame,
       rewrittenBuckets: Option[Set[Int]], writerId: String,
-      hooks: OccHooks, maxRebase: Int): Long = {
+      hooks: OccHooks, maxRebase: Int, prior: Option[StructType]): Long = {
     require(writerId.nonEmpty && !writerId.exists(c => c == '/' || c == '\t'),
       s"writerId must be path/manifest-safe: '$writerId'")
     val marker = occStagedPath(root, writerId)
@@ -983,9 +1019,6 @@ object VersionedTable {
     val newEntries = stageAndMoveIn(fs, root, new Path(root, s"_stage_$attempt"),
       touched, attempt, marker, () => ())
     val myBuckets = rewrittenBuckets.getOrElse(newEntries.keySet)
-    val schemaDdl = touched.schema.toDDL
-    require(!schemaDdl.contains("\t") && !schemaDdl.contains("\n"),
-      s"schema DDL not manifest-safe: $schemaDdl")
     hooks.beforePublish()
 
     def abortConflict(since: Long, overlap: Set[Int]): Nothing = {
@@ -1025,6 +1058,10 @@ object VersionedTable {
         if (overlap.nonEmpty) abortConflict(h, overlap)
       }
       val next = head.map(_ + 1).getOrElse(0L)
+      // a rebase keeps the columns the commits since the read added
+      val headSchema = head.filter(h => readV.forall(_ < h))
+        .flatMap(h => resolveManifest(fs, root, h)._2).map(StructType.fromDDL)
+      val schemaDdl = recordedDdl(headSchema.orElse(prior), touched.schema)
       val isFull = head.isEmpty || next % checkpointEvery == 0
       val body: Seq[String] =
         if (isFull) {
@@ -1105,7 +1142,8 @@ object VersionedTable {
     * snapshots. Within differing buckets, rewritten-but-equal rows
     * (carried by a bucket rewrite) cancel in the null-safe full-outer
     * compare and emit nothing — the diff is NET row changes, not file
-    * churn.
+    * churn. An additive fold that needs no row identity can skip that
+    * compare and fold [[churnBetween]] instead.
     *
     * Output: `change_op` plus the row image — pre-image for
     * delete/update_pre, post-image for insert/update_post. Both
@@ -1113,16 +1151,8 @@ object VersionedTable {
     */
   def changesBetween(spark: SparkSession, rootStr: String, key: String,
       fromV: Long, toV: Long): DataFrame = {
-    require(fromV < toV, s"changesBetween: fromV $fromV must precede toV $toV")
-    val root = new Path(rootStr)
-    val fs = fsOf(spark, root)
-    val (eFrom, _) = resolveManifest(fs, root, fromV)
-    val (eTo, _) = resolveManifest(fs, root, toV)
-    val changed = (eFrom.keySet ++ eTo.keySet).filter { b =>
-      eFrom.getOrElse(b, Nil).sorted != eTo.getOrElse(b, Nil).sorted
-    }.toSeq.sorted
-    val old = read(spark, rootStr, Some(fromV), Some(changed)).drop("__bucket")
-    val neu = read(spark, rootStr, Some(toV), Some(changed)).drop("__bucket")
+    val (old, neu) = changedBucketRows(spark, rootStr, fromV, toV,
+      "changesBetween")
     val dataCols = (old.columns.toSet ++ neu.columns.toSet - key).toSeq.sorted
     def side(df: DataFrame, tag: String): DataFrame =
       df.select(col(key) +: lit(true).as(s"__has_$tag") +:
@@ -1142,5 +1172,40 @@ object VersionedTable {
       .unionByName(img("b", "insert", hasB && !hasA))
       .unionByName(img("a", "update_pre", hasA && hasB && !same))
       .unionByName(img("b", "update_post", hasA && hasB && !same))
+  }
+
+  /** Gross churn between two versions: every row of each changed bucket
+    * at `fromV` as a `delete` and every row at `toV` as an `insert`,
+    * projected to `columns` (NULL where a version lacks one). It is
+    * [[changesBetween]] without the full-outer compare: rewritten-but-
+    * equal rows appear once on each side. Those pairs cancel under an
+    * additive fold — a signed COUNT, or a signed SUM of an exact type
+    * ([[MvMaintain.additive]]) — so such folds consume this tail and
+    * get the net result for two plain scans. MIN/MAX, double sums and
+    * any consumer that needs row identity must use [[changesBetween]].
+    */
+  private[graft] def churnBetween(spark: SparkSession, rootStr: String,
+      fromV: Long, toV: Long, columns: Seq[String]): DataFrame = {
+    val (old, neu) = changedBucketRows(spark, rootStr, fromV, toV,
+      "churnBetween")
+    def side(df: DataFrame, op: String): DataFrame =
+      df.select(lit(op).as("change_op") +: columns.map(c =>
+        if (df.columns.contains(c)) col(c) else lit(null).as(c)): _*)
+    side(old, "delete").unionByName(side(neu, "insert"))
+  }
+
+  /** The rows of every bucket whose file list differs between `fromV`
+    * and `toV` ([[bucketsChangedSince]]), read at each of the two
+    * versions, `__bucket` dropped. Buckets with identical lists cannot
+    * have changed (immutable files), so neither side reads them.
+    */
+  private def changedBucketRows(spark: SparkSession, rootStr: String,
+      fromV: Long, toV: Long, what: String): (DataFrame, DataFrame) = {
+    require(fromV < toV, s"$what: fromV $fromV must precede toV $toV")
+    val root = new Path(rootStr)
+    val changed = bucketsChangedSince(fsOf(spark, root), root, Some(fromV),
+      toV).toSeq.sorted
+    (read(spark, rootStr, Some(fromV), Some(changed)).drop("__bucket"),
+      read(spark, rootStr, Some(toV), Some(changed)).drop("__bucket"))
   }
 }

@@ -67,7 +67,7 @@ import graft.sources.VersionedTable
   * re-planned batches are deterministic (manifest-named files,
   * key-ordered diff), so redelivery is exact. Additive schema
   * evolution null-fills columns absent in older generations, same as
-  * the batch reader's mergeSchema.
+  * the batch reader's DDL-planned scan.
   */
 object VtCdfStream {
   /** Pass to `readStream.format(...)`. */

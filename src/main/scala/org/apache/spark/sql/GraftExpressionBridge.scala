@@ -18,4 +18,10 @@ object GraftExpressionBridge {
   def dataFrame(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `schema` with every field, nested ones included, nullable — what a
+    * file-source read makes of a data schema (`asNullable` is
+    * `private[spark]`).
+    */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
 }
